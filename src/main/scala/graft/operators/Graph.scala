@@ -1031,9 +1031,12 @@ object Graph {
           Seq("v"), "left_semi")
         .select(col("u"), col("v"))
         .localCheckpoint(false) // materialized by this round's counter job
-      byV.unpersist()
+      // The old degree cache backs `keep`, which the counter job below
+      // evaluates: release it only after that job has run.
+      val prevByV = byV
       byV = degrees(next)
       val (nNodes, nEdges, nBelow) = counters(byV) // materializes byV too
+      prevByV.unpersist()
       below = nBelow
       stats += ((r, nNodes, nEdges))
       edges = next

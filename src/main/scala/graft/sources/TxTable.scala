@@ -1,7 +1,17 @@
 package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.graftshim.SchemaShim
+import org.apache.spark.sql.types.StructType
 
 /** TxTable — a minimal TRANSACTIONAL table over parquet: an ordered
   * commit log of immutable manifest files on top of immutable data
@@ -61,7 +71,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale notes: manifests carry directory names, not per-row state —
   * commit cost is O(1) in table size; reads plan a normal multi-dir
-  * vectorized parquet scan (pushdown/pruning intact).
+  * vectorized parquet scan (pushdown/pruning intact) from each dir's
+  * file list and schema, read once per [[TxTable]] instance.
   */
 object TxTable {
   /** Default [[TxTable.vacuum]] retention: an hour dwarfs any real
@@ -92,6 +103,22 @@ object TxTable {
   */
 final class ConcurrentWriteException(msg: String)
   extends RuntimeException(msg)
+
+/** A fixed file set as a Spark [[FileIndex]]: the files of a TxTable
+  * read, listed once from immutable dirs, with no partition columns
+  * (staged dirs are flat; clustered rewrites publish their bucket
+  * leaves as dirs).
+  */
+private final class TxFileIndex(val rootPaths: Seq[HPath], files: Seq[FileStatus])
+    extends FileIndex {
+  override def listFiles(partitionFilters: Seq[Expression],
+                         dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+  override def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
+  override def refresh(): Unit = ()
+  override val sizeInBytes: Long = files.map(_.getLen).sum
+  override def partitionSchema: StructType = new StructType()
+}
 
 /** A read-snapshot-pinned transaction over a [[TxTable]] — the
   * Delta-style serializable commit protocol. Reads through the
@@ -243,12 +270,10 @@ class TxTable(val root: String) {
     if (dirs.isEmpty)
       snapshot(spark, asOf).filter(org.apache.spark.sql.functions.lit(false))
     else
-      // mergeSchema: the pruned dir set is small, and on an evolved
-      // table a single-file schema guess can lack `statsCol` entirely
-      // (unresolved-column at read). Rows predating the column read as
-      // NULL and fail the range predicate — excluded, as they should be.
-      applyDeletes(spark,
-          spark.read.option("mergeSchema", "true").parquet(dirs: _*), st.dvs)
+      // Union schema ([[scan]]): on an evolved table rows predating
+      // `statsCol` read as NULL and fail the range predicate — excluded,
+      // as they should be.
+      applyDeletes(spark, scan(spark, dirs), st.dvs)
         .filter(col(statsCol) >= lo && col(statsCol) <= hi)
   }
 
@@ -288,8 +313,7 @@ class TxTable(val root: String) {
     if (dirs.isEmpty)
       snapshot(spark, asOf).filter(org.apache.spark.sql.functions.lit(false))
     else
-      applyDeletes(spark,
-          spark.read.option("mergeSchema", "true").parquet(dirs: _*), st.dvs)
+      applyDeletes(spark, scan(spark, dirs), st.dvs)
         .filter(col(statsCol) >= lo && col(statsCol) <= hi)
   }
 
@@ -332,7 +356,7 @@ class TxTable(val root: String) {
     val n = footerRowCount(df.sparkSession, stage)
     val bf =
       if (n == 0L) org.apache.spark.util.sketch.BloomFilter.create(1L, 0.03)
-      else df.sparkSession.read.parquet(stage)
+      else scan(df.sparkSession, Seq(stage))
         .stat.bloomFilter(bloomCol, n, 0.03)
     var attempt = latestVersion().getOrElse(0L) + 1
     var published = false
@@ -368,10 +392,7 @@ class TxTable(val root: String) {
     if (dirs.isEmpty)
       snapshot(spark, asOf).filter(org.apache.spark.sql.functions.lit(false))
     else
-      // mergeSchema for the same reason as snapshotRange: evolution-safe
-      // on the (small) pruned dir set.
-      applyDeletes(spark,
-          spark.read.option("mergeSchema", "true").parquet(dirs: _*), st.dvs)
+      applyDeletes(spark, scan(spark, dirs), st.dvs)
         .filter(col(eqCol) === value)
   }
 
@@ -438,8 +459,7 @@ class TxTable(val root: String) {
             "the changes range — row removal cannot be expressed as appends; " +
             "re-read a full snapshot")
       if (m.dirs.isEmpty) None
-      else Some(spark.read.parquet(m.dirs: _*)
-        .withColumn("_commit_version", lit(v)))
+      else Some(scan(spark, m.dirs).withColumn("_commit_version", lit(v)))
       }
     }
     if (parts.isEmpty)
@@ -577,31 +597,80 @@ class TxTable(val root: String) {
   /** Snapshot read: replay manifests up to `asOf` (default: head) into
     * a concrete directory set, resolved EAGERLY — the returned
     * DataFrame is pinned to this snapshot no matter how many commits
-    * land while it is being consumed.
+    * land while it is being consumed. The schema is the union of the
+    * visible dirs' schemas ([[scan]]).
     */
   def snapshot(spark: SparkSession, asOf: Option[Long] = None): DataFrame = {
     val (dirs, dvs) = resolveDirsAndDvs(asOf) // one log replay per read
     if (dirs.isEmpty)
       throw new IllegalStateException(s"TxTable $root: no committed data" +
         asOf.map(v => s" at or before version $v").getOrElse(""))
-    applyDeletes(spark, spark.read.parquet(dirs: _*), dvs)
+    applyDeletes(spark, scan(spark, dirs), dvs)
   }
 
   /** Snapshot read under SCHEMA EVOLUTION: commits may ADD columns
     * over the table's life (the additive evolution every long-lived
-    * ingest needs); the merged read is the union schema, with nulls
-    * where an older commit predates a column. Kept separate from
-    * [[snapshot]] because schema merging pays a footer read per dir —
-    * the log-structured growth path is caching the union schema in a
-    * compaction manifest.
+    * ingest needs); the read is the union schema, with nulls where an
+    * older commit predates a column. Since every read plans through
+    * [[scan]], this is the same path as [[snapshot]]; the name stays
+    * for callers that state the evolution contract explicitly.
     */
-  def snapshotEvolved(spark: SparkSession, asOf: Option[Long] = None): DataFrame = {
-    val (dirs, dvs) = resolveDirsAndDvs(asOf) // one log replay per read
-    if (dirs.isEmpty)
-      throw new IllegalStateException(s"TxTable $root: no committed data" +
-        asOf.map(v => s" at or before version $v").getOrElse(""))
-    applyDeletes(spark,
-      spark.read.option("mergeSchema", "true").parquet(dirs: _*), dvs)
+  def snapshotEvolved(spark: SparkSession, asOf: Option[Long] = None): DataFrame =
+    snapshot(spark, asOf)
+
+  /** Per-dir scan metadata: the qualified dir path, its data files and
+    * the Spark schema of its first file (None: no data file).
+    */
+  private case class DirMeta(path: HPath, files: Seq[FileStatus],
+                             schema: Option[StructType])
+
+  /** [[DirMeta]] by dir, listed and footer-read once per instance. An
+    * entry never goes stale: a published dir is a uuid dir that is never
+    * rewritten, and [[vacuum]] deletes only dirs no manifest lists.
+    */
+  private val dirMeta = new ConcurrentHashMap[String, DirMeta]()
+
+  /** One driver-side listing (the parquet reader's hidden-file rule:
+    * skip `_*` and `.*`) plus one footer read — no Spark job. Every
+    * file of a staged dir comes from one write, so one footer holds the
+    * dir's schema.
+    */
+  private def dirMetaOf(spark: SparkSession, dir: String): DirMeta =
+    dirMeta.computeIfAbsent(dir, _ => {
+      val conf = spark.sessionState.newHadoopConf()
+      val raw = new HPath(dir)
+      val fs = raw.getFileSystem(conf)
+      val path = fs.makeQualified(raw)
+      val files = fs.listStatus(path).toSeq.filter { f =>
+        val n = f.getPath.getName
+        f.isFile && f.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
+      }
+      val schema = files.headOption.map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        val footer = try r.getFooter finally r.close()
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
+      DirMeta(path, files, schema)
+    })
+
+  /** The one read path: a parquet scan over exactly the files of
+    * `dirs`, planned from [[dirMeta]] — no directory listing and no
+    * schema-inference job per read. The schema is the per-dir schemas
+    * merged in `dirs` order by the merge `mergeSchema` uses, all fields
+    * nullable as on any parquet read; file paths are the qualified
+    * listing paths, so `_metadata.file_path` (the DV key) is unchanged.
+    */
+  private def scan(spark: SparkSession, dirs: Seq[String]): DataFrame = {
+    val metas = dirs.map(dirMetaOf(spark, _))
+    val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+    val schema = metas.flatMap(_.schema)
+      .reduceOption(SchemaShim.merge(_, _, caseSensitive))
+      .getOrElse(throw new IllegalStateException(
+        s"TxTable $root: no data files in ${dirs.mkString(", ")}"))
+    val index = new TxFileIndex(metas.map(_.path), metas.flatMap(_.files))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+      SchemaShim.asNullable(schema), None, new ParquetFileFormat(), Map.empty)(spark))
   }
 
   /** The full log state at `asOf`, from ONE replay: visible data dirs,
@@ -771,16 +840,15 @@ class TxTable(val root: String) {
   private def liveKeyed(spark: SparkSession, dirs: Seq[String],
                         dvDirs: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    // mergeSchema: on a schema-evolved table (the snapshotEvolved
-    // shape) the matched rows must carry the UNION schema — a read
-    // pinned to one file's schema would silently drop the evolved
-    // columns from every replacement row updateWhere writes back.
-    val raw = spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    // Union schema ([[scan]]): on a schema-evolved table the matched
+    // rows must carry every evolved column, or updateWhere would drop
+    // them from each replacement row it writes back.
+    val raw = scan(spark, dirs)
       .withColumn("_dv_file", col("_metadata.file_path"))
       .withColumn("_dv_row", col("_metadata.row_index"))
     if (dvDirs.isEmpty) raw
     else {
-      val dv = spark.read.parquet(dvDirs: _*)
+      val dv = scan(spark, dvDirs)
       raw.join(broadcast(dv),
         raw("_dv_file") === dv("file_path")
           && raw("_dv_row") === dv("row_index"), "left_anti")
@@ -805,7 +873,7 @@ class TxTable(val root: String) {
     val keyed = df
       .withColumn("_dv_file", col("_metadata.file_path"))
       .withColumn("_dv_row", col("_metadata.row_index"))
-    val dv = spark.read.parquet(dvDirs: _*)
+    val dv = scan(spark, dvDirs)
     keyed.join(broadcast(dv),
         keyed("_dv_file") === dv("file_path")
           && keyed("_dv_row") === dv("row_index"), "left_anti")
@@ -866,8 +934,7 @@ class TxTable(val root: String) {
       val (dirs, dvDirs) = resolveDirsAndDvs()
       if (dirs.isEmpty)
         throw new IllegalStateException(s"TxTable $root: nothing to update")
-      val dataCols = // union schema: see liveKeyed's mergeSchema note
-        spark.read.option("mergeSchema", "true").parquet(dirs: _*).columns.toSeq
+      val dataCols = scan(spark, dirs).columns.toSeq // union schema
       // A typo'd set key would otherwise be a silent no-op that still
       // commits tombstones + unchanged replacements.
       val unknown = set.keySet -- dataCols.toSet
@@ -909,13 +976,10 @@ class TxTable(val root: String) {
       if (dirs.isEmpty)
         throw new IllegalStateException(s"TxTable $root: nothing to optimize")
       // DV-applied read: the rewrite MATERIALIZES merge-on-read deletes,
-      // and the published overwrite (empty dvs) clears the DV set.
-      // mergeSchema: a compaction of an evolved table must rewrite the
-      // UNION schema — a single-file schema guess would permanently
-      // drop evolved columns from the table.
+      // and the published overwrite (empty dvs) clears the DV set. The
+      // union schema ([[scan]]) keeps every evolved column in the rewrite.
       val stage = stageData(
-        applyDeletes(spark,
-            spark.read.option("mergeSchema", "true").parquet(dirs: _*), dvDirs)
+        applyDeletes(spark, scan(spark, dirs), dvDirs)
           .coalesce(math.max(targetPartitions, 1)))
       if (tryPublish(head + 1, "overwrite", Seq(stage))) return head + 1
       // Lost to a concurrent commit: the rewrite is stale — drop it
@@ -955,9 +1019,7 @@ class TxTable(val root: String) {
         }
       }
       if (rewrite.isEmpty) return head // nothing intersects: no-op
-      val compacted = applyDeletes(spark,
-          spark.read.option("mergeSchema", "true").parquet(rewrite: _*),
-          st.dvs)
+      val compacted = applyDeletes(spark, scan(spark, rewrite), st.dvs)
         .coalesce(math.max(targetPartitions, 1))
       val stage = stageData(compacted)
       // Zone from the staged rewrite's parquet footers (round 15) —
@@ -1018,9 +1080,7 @@ class TxTable(val root: String) {
       if (dirs.isEmpty)
         throw new IllegalStateException(s"TxTable $root: nothing to optimize")
       // DV-applied read: clustering rewrites materialize deletes too.
-      // mergeSchema: same union-schema requirement as optimizeCompact.
-      val snap = applyDeletes(spark,
-        spark.read.option("mergeSchema", "true").parquet(dirs: _*), dvDirs)
+      val snap = applyDeletes(spark, scan(spark, dirs), dvDirs)
       val ck = cluster.cast("long")
       val r = snap.agg(min(ck), max(ck)).head()
       if (r.isNullAt(0)) return optimizeCompact(spark, 1) // no key values: plain compact
@@ -1372,40 +1432,46 @@ class TxTable(val root: String) {
     * FOOTERS alone — the same values a min/max aggregation over the
     * batch returns (INT64 statistics are exact, never truncated), at
     * zero Spark jobs. Columns absent, non-INT64, or with no non-null
-    * value in any file are OMITTED from the result (→ no zone, the
-    * pre-round-15 behavior for empty/all-null batches).
+    * value in any file are OMITTED from the result (→ no zone, as a
+    * min/max aggregate over an empty/all-null batch gives). So is a column
+    * whose chunk in a non-empty row group carries no min/max without
+    * proving itself all-null (statistics disabled, a foreign writer):
+    * its values are unbounded, and a zone from the other chunks would
+    * let range pruning skip rows it holds.
     */
-  private def footerLongZones(spark: SparkSession, stage: String,
-                              cols: Seq[String]): Map[String, (Long, Long)] = {
+  private[graft] def footerLongZones(spark: SparkSession, stage: String,
+                                     cols: Seq[String]): Map[String, (Long, Long)] = {
     import scala.jdk.CollectionConverters._
     val want = cols.toSet
     val acc = scala.collection.mutable.Map.empty[String, (Long, Long)]
-    var nonLong = Set.empty[String]
+    var unusable = Set.empty[String]
     stageFooters(spark, stage).foreach { md =>
       md.getBlocks.asScala.foreach { b =>
         b.getColumns.asScala.foreach { c =>
           val name = c.getPath.toDotString
           if (want.contains(name)) {
+            val st = c.getStatistics
             if (c.getPrimitiveType.getPrimitiveTypeName !=
                 org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64)
-              nonLong += name
-            else {
-              val st = c.getStatistics
-              if (st != null && !st.isEmpty && st.hasNonNullValue) {
-                val mn = st.genericGetMin.asInstanceOf[java.lang.Long].longValue()
-                val mx = st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-                acc.get(name) match {
-                  case Some((a, z)) =>
-                    acc(name) = (math.min(a, mn), math.max(z, mx))
-                  case None => acc(name) = (mn, mx)
-                }
+              unusable += name
+            else if (st != null && st.hasNonNullValue) {
+              val mn = st.genericGetMin.asInstanceOf[java.lang.Long].longValue()
+              val mx = st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
+              acc.get(name) match {
+                case Some((a, z)) =>
+                  acc(name) = (math.min(a, mn), math.max(z, mx))
+                case None => acc(name) = (mn, mx)
               }
+            } else {
+              val allNull = st != null && st.isNumNullsSet &&
+                st.getNumNulls == c.getValueCount
+              if (b.getRowCount > 0 && !allNull) unusable += name
             }
           }
         }
       }
     }
-    (acc -- nonLong).toMap
+    (acc -- unusable).toMap
   }
 
   /** Stage the batch invisibly, then publish with create-exclusive

@@ -25,6 +25,12 @@ import graft.Tables
   */
 object StreamingSketch {
 
+  /** Files in the range-ordered corpus stage, and the trigger's file
+    * cap: equal by construction, so one trigger reads the whole stage
+    * and the sentinel file always forms the next batch.
+    */
+  private val CorpusFiles = 4
+
   private def hashCol(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")
 
@@ -41,7 +47,8 @@ object StreamingSketch {
     // Corpus stage range-ordered on ts (parallel staging write; the
     // watermark can then never outrun rows in later files of the
     // stage — see GateIO.stageFiles); 1-row sentinel stage after it.
-    GateIO.stageFiles(e, tmp, upstream, 1, orderBy = Some(col("ts")))
+    GateIO.stageFiles(e, tmp, upstream, 1, orderBy = Some(col("ts")),
+      rangeParts = CorpusFiles)
     GateIO.stageFiles(Seq((new java.sql.Timestamp(mx.getTime + 3 * 3600000L), -1L))
       .toDF("ts", "user_id"), tmp, upstream, 2)
 
@@ -49,7 +56,7 @@ object StreamingSketch {
     val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     GateIO.runPinned(spark, 4)(spark.readStream
       .schema("ts TIMESTAMP, user_id BIGINT")
-      // One trigger consumes the whole 4-file corpus stage; the
+      // One trigger consumes the whole CorpusFiles-file stage; the
       // sentinel (strictly newer mtime) forms the second and last
       // batch (round 15, ~0.4 s of per-batch planning + state-store
       // commit per micro-batch removed). Batch boundaries are NOT
@@ -64,7 +71,7 @@ object StreamingSketch {
       // the read-back groupBy collapses. Contrast st4/st16/st18,
       // where late-vs-watermark arrival ORDER is the scenario and
       // stays per-file.
-      .option("maxFilesPerTrigger", "4")
+      .option("maxFilesPerTrigger", CorpusFiles.toLong)
       .parquet(upstream.toString)
       .withWatermark("ts", "1 hour")
       .select(col("ts"),

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.sources.TxTable
 
@@ -685,6 +689,158 @@ class TxTableSpec extends SparkSpec {
       assert(s.columns.toSet == Set("k", "v", "tv"))
       assert(s.filter(col("tv") === 9999L).count() == 1L)
       assert(s.count() == 51L)
+    } finally TmpIO.deleteRecursively(new java.io.File(dir))
+  }
+
+  /** Spark jobs started by `body` on this thread, counted by job group
+    * with a listener. A fence job submitted after `body` is awaited, so
+    * every earlier job-start event has been delivered before counting.
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("txtable-read", "read planning")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("txtable-fence", "listener fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("txtable-fence") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("txtable-fence"), "fence job start never delivered")
+      groups.asScala.count(_ == "txtable-read")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("building a read DataFrame starts no Spark job (no listing or schema job)") {
+    val (dir, t) = freshTable()
+    try {
+      t.appendWithStats((1L to 50L).map(i => (i, i * 10)).toDF("k", "v"), "k")
+      t.appendWithBloom((51L to 90L).map(i => (i, i * 10)).toDF("k", "v"), "k")
+      t.append(Seq((91L, 910L, "x")).toDF("k", "v", "tag"))
+      t.deleteWhere(spark, col("k") === 7L)
+      for (r <- Seq(t, new TxTable(t.root))) {
+        val built = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+        val n = jobsStartedBy {
+          built += r.snapshot(spark)
+          built += r.snapshot(spark, Some(2L))
+          built += r.snapshotRange(spark, "k", 40L, 60L)
+          built += r.snapshotEvolved(spark)
+          built += r.snapshotEquals(spark, "k", 70L)
+        }
+        assert(n == 0, s"read planning started $n Spark job(s)")
+        assert(built.map(_.count()) == Seq(90L, 90L, 21L, 90L, 1L))
+      }
+    } finally TmpIO.deleteRecursively(new java.io.File(dir))
+  }
+
+  /** The read every TxTable scan must equal: Spark's own merged-schema
+    * parquet read of `dirs` with the DV tombstones anti-joined away.
+    */
+  private def reference(dirs: Seq[String], dvs: Seq[String]): DataFrame = {
+    val raw = spark.read.option("mergeSchema", "true").parquet(dirs: _*)
+    if (dvs.isEmpty) raw
+    else {
+      val keyed = raw.withColumn("_f", col("_metadata.file_path"))
+        .withColumn("_r", col("_metadata.row_index"))
+      val dv = spark.read.parquet(dvs: _*)
+      keyed.join(dv, keyed("_f") === dv("file_path") &&
+          keyed("_r") === dv("row_index"), "left_anti")
+        .drop("_f", "_r")
+    }
+  }
+
+  private def assertSameRead(got: DataFrame, want: DataFrame, what: String): Unit = {
+    assert(got.schema == want.schema, s"$what: schema ${got.schema} != ${want.schema}")
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(got) == rows(want), s"$what: rows differ")
+  }
+
+  test("every read equals a merged-schema parquet read minus DVs (warm and fresh)") {
+    val (dir, t) = freshTable()
+    try {
+      t.appendWithStats((1L to 40L).map(i => (i, i.toInt)).toDF("k", "v"), "k")  // v1
+      t.appendWithStats((41L to 80L).map(i => (i, i.toInt)).toDF("k", "v"), "k") // v2
+      t.appendWithBloom((81L to 100L).map(i => (i, i.toInt)).toDF("k", "v"), "k") // v3
+      t.append((101L to 120L).map(i => (i, i.toInt, s"t$i"))
+        .toDF("k", "v", "tag"))                                     // v4: +tag
+      t.deleteWhere(spark, col("k") % 7 === 0)                      // v5: DVs
+      t.optimizeCompactWhere(spark, "k", 41L, 60L)                  // v6: keeps v1
+      t.deleteWhere(spark, col("k") === 3L || col("k") === 110L)    // v7
+      t.append(Seq((121L, 121, "y")).toDF("k", "v", "tag"))         // v8
+      assert(t.resolveDirs().size == 3 && t.resolveDvDirs().size == 2)
+      val ks = Seq(Some(4L), Some(5L), Some(6L), None)
+      for ((r, label) <- Seq(t -> "warm", new TxTable(t.root) -> "fresh"); asOf <- ks) {
+        val what = s"$label asOf=$asOf"
+        val (dirs, dvs) = t.resolveDirsAndDvs(asOf)
+        val ref = reference(dirs, dvs)
+        assertSameRead(r.snapshot(spark, asOf), ref, s"$what snapshot")
+        assertSameRead(r.snapshotEvolved(spark, asOf), ref, s"$what snapshotEvolved")
+        val rangeRef = reference(t.resolveDirsRange("k", 35L, 70L, asOf), dvs)
+          .filter(col("k") >= 35L && col("k") <= 70L)
+        assertSameRead(r.snapshotRange(spark, "k", 35L, 70L, asOf), rangeRef,
+          s"$what snapshotRange")
+        val eqRef = reference(t.resolveDirsEquals("k", 90L, asOf), dvs)
+          .filter(col("k") === 90L)
+        assertSameRead(r.snapshotEquals(spark, "k", 90L, asOf), eqRef,
+          s"$what snapshotEquals")
+      }
+      // The changes feed over the pre-delete appends: per-version reads.
+      val changesRef = (1L to 4L).map { v =>
+        val added = t.resolveDirs(Some(v)).diff(t.resolveDirs(Some(v - 1)))
+        reference(added, Nil).withColumn("_commit_version", lit(v))
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
+      assertSameRead(new TxTable(t.root).readChanges(spark, 0L, Some(4L)),
+        changesRef, "readChanges")
+    } finally TmpIO.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("footer zones: a chunk without statistics publishes no zone; no rows lost") {
+    val (dir, t) = freshTable()
+    val statsKey = "parquet.column.statistics.enabled"
+    def withoutStats[A](body: => A): A = {
+      spark.conf.set(statsKey, "false")
+      try body finally spark.conf.unset(statsKey)
+    }
+    try {
+      // A batch staged without column statistics: no zone, nothing pruned.
+      withoutStats(t.appendWithStats((1L to 20L).toDF("k"), "k"))
+      assert(t.resolveDirsRange("k", 1000L, 2000L).size == 1)
+      assert(t.snapshotRange(spark, "k", 5L, 9L).count() == 5L)
+      // One staged dir holding a file WITH statistics (k in [1, 10]) and
+      // one WITHOUT (k in [100, 110]), as a foreign writer can leave it:
+      // the first file's bounds alone must not become the dir's zone.
+      val stage = Paths.get(t.root, "data", "mixed")
+      Files.createDirectories(stage)
+      def moveIn(src: String, name: String): java.nio.file.Path = {
+        val f = new java.io.File(src).listFiles().filter(_.getName.endsWith(".parquet")).head
+        Files.move(f.toPath, stage.resolve(name))
+      }
+      (1L to 10L).toDF("k").coalesce(1).write.parquet(s"$dir/with")
+      withoutStats((100L to 110L).toDF("k").coalesce(1).write.parquet(s"$dir/without"))
+      moveIn(s"$dir/with", "part-0.parquet")
+      val bare = moveIn(s"$dir/without", "part-1.parquet")
+      val footer = {
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(bare.toString), spark.sessionState.newHadoopConf())
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try r.getFooter finally r.close()
+      }
+      val st: org.apache.parquet.column.statistics.Statistics[_] =
+        footer.getBlocks.get(0).getColumns.get(0).getStatistics
+      assert(st == null || !st.hasNonNullValue, "precondition: file has no k statistics")
+      val zones = t.footerLongZones(spark, stage.toString, Seq("k"))
+      assert(zones.isEmpty, s"zone published from partial statistics: $zones")
+      assert(t.tryPublish(2L, "append", Seq(stage.toString),
+        stats = zones.get("k").map { case (mn, mx) => ("k", mn, mx) }))
+      assert(t.snapshotRange(spark, "k", 100L, 110L).count() == 11L)
+      assert(t.snapshotRange(spark, "k", 1L, 10L).count() == 20L)
     } finally TmpIO.deleteRecursively(new java.io.File(dir))
   }
 }
